@@ -160,9 +160,8 @@ def q_coref_canonical(spark, sf_dir):
 
 
 def _cluster_frames(spark, sf_dir):
-    # pin the shared mention frame: pred AND gold clusterings consume it
-    # (plus the CC loop re-reads it per round) — without the checkpoint the
-    # token explode re-runs once per consumer
+    # pin the shared mention frame: pred AND gold clusterings consume it —
+    # without the checkpoint the token explode re-runs once per consumer
     mentions = EX.detect_mentions(_turns(spark, sf_dir)).localCheckpoint(
         eager=False
     )

@@ -8,20 +8,27 @@ Reference semantics:
   /root/reference/dygie/models/coref.py:451-506;
   template.libsonnet:94). In Spark: a *band self-join* —
   ``a.mention_ix < b.mention_ix AND b.mention_ix - a.mention_ix <= 100``
-  within a conversation.
+  within a conversation (:func:`antecedent_candidates`).
 * Antecedent decode -> clusters: greedy pointer-following
   (coref.py:367-439). Pointers only ever go backward, so cluster formation
-  is exactly connected components over the antecedent edge set. We run
-  iterative min-id label propagation (small-star style) to a fixpoint —
-  each round is one join + one aggregate, checkpointed to cut lineage.
+  is exactly connected components over the antecedent edge set.
+  :func:`connected_components` (neighbor-min + pointer doubling) and
+  :func:`pointer_components` (pointer doubling over a one-parent forest)
+  are the general operators for scored or arbitrary edge sets.
+* The pipeline's deterministic decode (nearest earlier same-surface
+  mention at most ``max_antecedents`` back) needs neither: a component is
+  a run of same-surface mentions with no gap over the window, so
+  :func:`coref_clusters` finds it with one window pass (run starts via
+  ``lag``, cluster id = running max of run starts).
 * K11 canonicalization (dw-experiments/shared/coref_to_tsv.py:11-33):
   cluster exemplar = the LONGEST member span (argmax span length,
   deterministic tiebreak = first occurrence).
 
-Scale notes: the band join's equi-key is conv_id; per-conversation mention
-counts are bounded by the upstream beam (0.3 spans/word) and chunking, so
-the join fans out at most 100x per row. Label propagation converges in
-O(log(longest path)) rounds; each round shuffles once on the node key.
+Scale notes: :func:`coref_clusters` shuffles once, on conv_id, for the
+mention order; the (conv_id, surface) window reuses that partitioning.
+The band join's equi-key is conv_id and it fans out at most 100x per row;
+the CC loops converge in O(log(longest path)) rounds, each shuffling on
+the node key.
 """
 
 from __future__ import annotations
@@ -240,24 +247,25 @@ def pointer_components(
 
 
 def coref_clusters(mentions: DataFrame, max_antecedents: int = MAX_ANTECEDENTS) -> DataFrame:
-    """Full stub-coref pass: same-surface antecedent edges -> components.
+    """Full stub-coref pass: same-surface antecedent links -> components.
 
-    Returns mentions + cluster_id (doc-level). For the same-surface rule the
-    component is provably "all mentions of a surface within a conversation"
-    whenever consecutive same-surface mentions are <= max_antecedents
-    apart — which is what the DuckDB oracle exploits.
-
-    The decode emits ONE antecedent per anaphor (argmax), so the edge set
-    is a pointer forest and the cheaper :func:`pointer_components` applies;
-    :func:`connected_components` remains the operator for arbitrary edge
-    sets (e.g. cross-doc entity merging).
+    Returns mentions + mention_ix + cluster_id (doc-level). An anaphor
+    links to its nearest earlier same-surface mention at most
+    ``max_antecedents`` back, so a cluster is a run of same-surface
+    mentions with no gap over the window. One (conv_id, surface) window in
+    mention order flags run starts (``lag`` null or too far back);
+    cluster_id is the running max of run starts — the chain root that
+    :func:`pointer_components` finds over :func:`coref_edges_same_surface`.
+    Null surfaces never link, so they stay singletons. Lazy, and the plan
+    shuffles once: the window reuses mention_order's conv_id partitioning.
     """
-    ordered = mention_order(mentions)
-    edges = coref_edges_same_surface(mentions, max_antecedents)
-    labels = pointer_components(
-        edges, ordered.select("conv_id", "mention_ix")
+    w = Window.partitionBy("conv_id", "surface").orderBy("mention_ix")
+    gap = F.col("mention_ix") - F.lag("mention_ix").over(w)
+    run_start = F.col("surface").isNull() | gap.isNull() | (gap > max_antecedents)
+    upto_here = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return mention_order(mentions).withColumn(
+        "cluster_id", F.max(F.when(run_start, F.col("mention_ix"))).over(upto_here)
     )
-    return ordered.join(labels, ["conv_id", "mention_ix"])
 
 
 def coref_clusters_global(mentions: DataFrame) -> DataFrame:

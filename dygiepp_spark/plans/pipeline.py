@@ -8,7 +8,7 @@ per-partition lineage and metrics rows. Pattern (SURVEY.md §7 stage 7):
   sandbox, an Iceberg table ``<catalog>.<db>.<stage>`` on a cluster —
   selected by ``SPARK_GRAFT_TABLE_FORMAT`` without touching stage code
 * alongside it a ``_metrics`` table: one row per output partition
-  (stage, partition_id, rows, bytes-est, wall, written_at)
+  (stage, partition_id, rows, stage_wall_sec, written_at)
 * a ``_SUCCESS``-gated manifest — a re-run skips stages whose manifest is
   present, giving crash-resume at stage granularity (the reference's
   instance-cache analog, dygie/data/dataset_readers/dygie.py:194-203).

@@ -77,8 +77,19 @@ class ParquetStore:
             return json.load(f)
 
     def commit_manifest(self, name: str, payload: dict) -> None:
-        with open(self._manifest_path(name), "w") as f:
-            json.dump(payload, f)
+        # write-then-rename: a crash mid-write leaves only the temp file,
+        # so the stage stays un-manifested and the resume re-runs it
+        path = self._manifest_path(name)
+        tmp = f"{path}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(payload, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
 
 class IcebergStore:

@@ -62,6 +62,71 @@ def test_coref_clusters_same_surface(spark):
     assert sorted(sizes.values()) == [1, 1, 3]
 
 
+def _assert_matches_pointer_components(m, max_antecedents):
+    """coref_clusters must equal the general decode: same-surface edges
+    through pointer_components, joined back onto the mention order."""
+    ordered = CO.mention_order(m)
+    labels = CO.pointer_components(
+        CO.coref_edges_same_surface(m, max_antecedents),
+        ordered.select("conv_id", "mention_ix"),
+    )
+    ref = ordered.join(labels, ["conv_id", "mention_ix"])
+    got = CO.coref_clusters(m, max_antecedents).select(*ref.columns)
+    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+    return {(r["conv_id"], r["mention_ix"], r["cluster_id"]) for r in got.collect()}
+
+
+def test_coref_clusters_equals_pointer_components_sf(spark, sf_dir):
+    from dygiepp_spark.operators import extraction as EX
+
+    mentions = EX.detect_mentions(
+        TT.turns_from_documents(spark, sf_dir, with_ts=False)
+    ).localCheckpoint()
+    _assert_matches_pointer_components(mentions, CO.MAX_ANTECEDENTS)
+
+
+def _gap_frame(spark, gap):
+    # "s" at mention 0 and at mention `gap`, "f" fillers in between
+    rows = [("d", 0, 0, 0, "s")]
+    rows += [("d", i, 0, 0, "f") for i in range(1, gap)]
+    rows += [("d", gap, 0, 0, "s")]
+    return _mentions(spark, rows)
+
+
+def test_coref_clusters_gap_at_window_is_one_cluster(spark):
+    k = CO.MAX_ANTECEDENTS
+    got = _assert_matches_pointer_components(_gap_frame(spark, k), k)
+    assert {("d", 0, 0), ("d", k, 0)} <= got
+
+
+def test_coref_clusters_gap_past_window_splits(spark):
+    k = CO.MAX_ANTECEDENTS
+    got = _assert_matches_pointer_components(_gap_frame(spark, k + 1), k)
+    assert {("d", 0, 0), ("d", k + 1, k + 1)} <= got
+
+
+def test_coref_clusters_interleaved_null_surface_window_one(spark):
+    m = _mentions(
+        spark,
+        [
+            ("d", 0, 0, 0, "a"),
+            ("d", 0, 1, 1, "a"),  # adjacent: links to 0
+            ("d", 0, 2, 2, "b"),
+            ("d", 0, 3, 3, "a"),  # 2 back: past the window, new run
+            ("d", 0, 4, 4, None),
+            ("d", 0, 5, 5, None),  # null never links, even adjacent
+            ("d", 0, 6, 6, "b"),
+            ("d", 0, 7, 7, "b"),
+            ("e", 0, 0, 0, "a"),
+            ("e", 0, 1, 1, "a"),
+        ],
+    )
+    assert _assert_matches_pointer_components(m, 1) == {
+        ("d", 0, 0), ("d", 1, 0), ("d", 2, 2), ("d", 3, 3), ("d", 4, 4),
+        ("d", 5, 5), ("d", 6, 6), ("d", 7, 6), ("e", 0, 0), ("e", 1, 0),
+    }
+
+
 def test_canonicalize_longest_member_wins(spark):
     clustered = spark.createDataFrame(
         [

@@ -86,6 +86,37 @@ def test_manifest_commits_after_data(spark, tmp_path):
     assert store.read("s1").count() == 5
 
 
+def test_crash_mid_manifest_write_reruns_stage(spark, tmp_path, monkeypatch):
+    """A crash while the manifest is being written must leave no
+    manifest.json (not a truncated one), so the next run re-runs the stage
+    instead of failing to parse the manifest."""
+    from dygiepp_spark.plans import store as store_mod
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    def build():
+        p = Pipeline(spark, str(tmp_path))
+        p.stage("s1")(lambda ctx: spark.range(5).toDF("id"))
+        return p
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj)[:7])
+        f.flush()
+        raise OSError("disk full")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(store_mod.json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            build().run()
+
+    stage_dir = tmp_path / "s1"
+    assert not (stage_dir / "manifest.json").exists()
+    assert [p.name for p in stage_dir.iterdir() if "manifest" in p.name] == []
+    rerun = build()
+    rerun.run()
+    assert [(r.name, r.rows, r.resumed) for r in rerun.results] == [("s1", 5, False)]
+    assert json.loads((stage_dir / "manifest.json").read_text())["rows"] == 5
+
+
 def test_cli_curated_pipeline_filters_then_extracts(spark, sf_dir, tmp_path, capsys):
     """--with-curation prepends filter/dedup/scrub stages; extraction then
     consumes the curated doc set (fewer turns than the raw derivation),

@@ -322,3 +322,23 @@ def test_bucketed_join_needs_no_exchange(spark, stored_turns):
     assert count_shuffles(plan) == 0, plan
     spark.sql("DROP TABLE IF EXISTS t_left")
     spark.sql("DROP TABLE IF EXISTS t_right")
+
+
+def test_coref_clusters_lazy_single_shuffle(spark, stored_turns):
+    """Same-surface clustering is one window pass over the mention order:
+    building the frame runs no Spark job (no eager CC loop), and the plan
+    shuffles once, on conv_id."""
+    from dygiepp_spark.operators.coref import coref_clusters
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "plan-shape-coref-clusters"
+    sc.setJobGroup(group, "build coref_clusters without running it")
+    try:
+        clusters = coref_clusters(EX.detect_mentions(stored_turns))
+        assert list(tracker.getJobIdsForGroup(group)) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert count_shuffles(plan_of(clusters)) <= 1
