@@ -343,7 +343,8 @@ def ie_eval(
     ``pred``: (conv_id, arg0, arg1, label, conf); ``gold``: same minus conf.
     Returns ONE row (n_pred, n_gold, tp, tp_recall, precision, recall, f1).
     P = TP / n_pred_kept (the reference's TP/(TP+FP) with FP = topK - TP);
-    R = TP_recall / n_gold.
+    R = TP_recall / n_gold. One lazy plan of one-row aggregates cross-joined:
+    building it runs no Spark job, except ``topk``'s score-threshold collect.
     """
     if topk is not None:
         # reference cut is HEAD-k (predrels[:topK], eval_utils.py:783-785),
@@ -363,14 +364,8 @@ def ie_eval(
         pred = survivors.withColumn("_rn", F.row_number().over(w)).filter(
             F.col("_rn") <= topk
         ).drop("_rn")
-    # four scalar actions follow (tp, tp_recall, n_pred, n_gold) — pin the
-    # upstream extraction once instead of re-running it per action
-    pred = pred.select("conv_id", "arg0", "arg1", "label").localCheckpoint(
-        eager=False
-    )
-    gold = gold.select("conv_id", "arg0", "arg1", "label").localCheckpoint(
-        eager=False
-    )
+    pred = pred.select("conv_id", "arg0", "arg1", "label")
+    gold = gold.select("conv_id", "arg0", "arg1", "label")
     if aliases is not None:
         # K2 coref/alias expansion (eval_utils.py:265-287
         # ``read_coref_matches`` + the alias loops in relation_matching):
@@ -423,22 +418,19 @@ def ie_eval(
     ]
     matches = p.join(g, on=cond)
 
-    # ONE job over the (possibly expensive, fuzzy-predicate) match join
-    # for both distinct counts — two separate .count() actions would run
-    # the join twice
-    tp_row = matches.agg(
+    # one aggregate over the (possibly expensive, fuzzy-predicate) match
+    # join for both distinct counts; the counts are one-row aggregates
+    # cross-joined into one lazy plan (distinct + count(1) keeps rows
+    # holding nulls, as distinct().count() did)
+    tp = matches.agg(
         F.count_distinct("p.conv_id", "p.arg0", "p.arg1").alias("tp"),
         F.count_distinct("g.conv_id", "g.arg0", "g.arg1").alias("tp_recall"),
-    ).collect()[0]
-    tp, tp_recall = tp_row["tp"], tp_row["tp_recall"]
-    n_pred = pred.select("conv_id", "arg0", "arg1").distinct().count()
-    n_gold = g.distinct().count()
-
-    spark = pred.sparkSession
-    row = spark.createDataFrame(
-        [(n_pred, n_gold, tp, tp_recall)],
-        "n_pred bigint, n_gold bigint, tp bigint, tp_recall bigint",
     )
+    n_pred = pred.select("conv_id", "arg0", "arg1").distinct().agg(
+        F.count(F.lit(1)).alias("n_pred")
+    )
+    n_gold = gold.distinct().agg(F.count(F.lit(1)).alias("n_gold"))
+    row = n_pred.crossJoin(n_gold).crossJoin(tp)
     prec = F.col("tp").cast("double") / F.greatest(F.col("n_pred"), F.lit(1)).cast("double")
     rec = F.col("tp_recall").cast("double") / F.greatest(F.col("n_gold"), F.lit(1)).cast("double")
     return row.select(
@@ -453,20 +445,28 @@ def ie_span_eval(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """K4 (eval_utils.py:620-682): argument-span-level P/R/F1 ignoring
     pairing — explode arg0/arg1 to (conv, text) sets on both sides."""
 
-    def spans_of(df: DataFrame) -> DataFrame:
-        return (
-            df.select("conv_id", F.col("arg0").alias("span"))
-            .unionByName(df.select("conv_id", F.col("arg1").alias("span")))
-            .distinct()
+    def spans_of(df: DataFrame, side: str) -> DataFrame:
+        return df.select(
+            "conv_id",
+            F.explode(F.array("arg0", "arg1")).alias("span"),
+            F.lit(side == "pred").alias("in_pred"),
+            F.lit(side == "gold").alias("in_gold"),
         )
 
-    ps = spans_of(pred).localCheckpoint(eager=False)
-    gs = spans_of(gold).localCheckpoint(eager=False)
-    tp = ps.join(gs, ["conv_id", "span"]).count()
-    n_p, n_g = ps.count(), gs.count()
-    spark = pred.sparkSession
-    row = spark.createDataFrame(
-        [(n_p, n_g, tp)], "n_pred_spans bigint, n_gold_spans bigint, tp bigint"
+    # one shuffle: group both sides' spans by (conv_id, span) and count
+    # the sides each distinct span occurs on; null keys group like
+    # distinct() but never match, as in an equi-join
+    spans = (
+        spans_of(pred, "pred")
+        .unionByName(spans_of(gold, "gold"))
+        .groupBy("conv_id", "span")
+        .agg(F.bool_or("in_pred").alias("p"), F.bool_or("in_gold").alias("g"))
+    )
+    matched = F.col("p") & F.col("g") & F.col("conv_id").isNotNull() & F.col("span").isNotNull()
+    row = spans.agg(
+        F.count_if(F.col("p")).alias("n_pred_spans"),
+        F.count_if(F.col("g")).alias("n_gold_spans"),
+        F.count_if(matched).alias("tp"),
     )
     prec = F.col("tp").cast("double") / F.greatest(F.col("n_pred_spans"), F.lit(1)).cast("double")
     rec = F.col("tp").cast("double") / F.greatest(F.col("n_gold_spans"), F.lit(1)).cast("double")

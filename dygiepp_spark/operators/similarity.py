@@ -560,7 +560,9 @@ def ivf_recall(
 ) -> DataFrame:
     """Measured recall of the IVF scale path against exact brute force —
     per query, how many of the true top-``k`` neighbors the nprobe=1
-    cell search returned: ``(query_id, n_hit, recall)``. THE number the
+    cell search returned: ``(query_id, n_hit, recall)``, recall being
+    ``n_hit`` over the query's true-neighbour count (``k``, or fewer on a
+    corpus smaller than ``k + 1``). THE number the
     documented IVF speed/recall tradeoff is judged by, measured instead
     of asserted; a low-recall query sits near a cell boundary (raise
     nprobe or re-train centroids).
@@ -578,19 +580,12 @@ def ivf_recall(
     )
     hits = bf.join(iv, ["query_id", "neighbor_id"], "left_semi")
     per = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit"))
-    base = bf.select("query_id").distinct()
-    return (
-        base.join(per, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint")).alias(
-                "n_hit"
-            ),
-        )
-        .select(
-            "query_id", "n_hit",
-            (F.col("n_hit").cast("double") / F.lit(float(k))).alias(
-                "recall"
-            ),
-        )
+    # a corpus smaller than k + 1 gives a query fewer than k true
+    # neighbours: recall is out of the neighbours brute force returned
+    base = bf.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_true"))
+    n_hit = F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint"))
+    return base.join(per, "query_id", "left").select(
+        "query_id",
+        n_hit.alias("n_hit"),
+        (n_hit.cast("double") / F.col("n_true").cast("double")).alias("recall"),
     )

@@ -7,20 +7,24 @@ per-partition lineage and metrics rows. Pattern (SURVEY.md §7 stage 7):
   (``plans/store.py``): parquet under ``<warehouse>/<stage>/data`` in the
   sandbox, an Iceberg table ``<catalog>.<db>.<stage>`` on a cluster —
   selected by ``SPARK_GRAFT_TABLE_FORMAT`` without touching stage code
-* alongside it a ``_metrics`` table: one row per output partition
-  (stage, partition_id, rows, stage_wall_sec, written_at)
-* a ``_SUCCESS``-gated manifest — a re-run skips stages whose manifest is
-  present, giving crash-resume at stage granularity (the reference's
-  instance-cache analog, dygie/data/dataset_readers/dygie.py:194-203).
+* alongside it a ``_metrics`` table: one row per output partition, i.e.
+  per write task (stage, partition_id, rows, stage_wall_sec, written_at)
+* a manifest committed last and atomically — a re-run skips stages whose
+  manifest is present, giving crash-resume at stage granularity (the
+  reference's instance-cache analog,
+  dygie/data/dataset_readers/dygie.py:194-203).
 
-The metrics row collection uses ``spark_partition_id()`` + a groupBy —
-no driver-side iteration over partitions.
+The ``_metrics`` rows and the manifest's row count come from the counts
+the store reads off the files it just wrote (Parquet footers, Iceberg's
+``files`` table), so a stage costs its data write and no further scan of
+the data.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from typing import Callable
 
 import pyspark.sql.functions as F
@@ -83,24 +87,13 @@ class Pipeline:
                 )
                 continue
             out = fn(ctx)
-            materialized = self.store.write(name, out)
-            # per-partition lineage/metrics: one aggregate over the data,
-            # keyed by physical partition id
-            metrics = (
-                materialized.groupBy(
-                    F.spark_partition_id().alias("partition_id")
-                )
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .select(
-                    F.lit(name).alias("stage"),
-                    "partition_id",
-                    "rows",
-                    F.lit(time.time() - t0).alias("stage_wall_sec"),
-                    F.current_timestamp().alias("written_at"),
-                )
+            materialized, rows = self.store.write(name, out)
+            wall, now = time.time() - t0, datetime.now(timezone.utc)
+            self.store.write_metrics(
+                name,
+                [(name, pid, n, wall, now) for pid, n in sorted(rows.items())],
             )
-            self.store.write_metrics(name, metrics)
-            n = materialized.count()
+            n = sum(rows.values())
             # manifest commits LAST: a crash before this point leaves the
             # stage un-manifested and the resume re-runs it
             self.store.commit_manifest(

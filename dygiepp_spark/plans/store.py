@@ -1,22 +1,28 @@
 """Stage-output table store: parquet in the sandbox, Iceberg on a cluster.
 
-The pipeline's checkpoint contract (write stage output + per-partition
-metrics, re-read for the next stage, manifest-gated resume) is format-
-agnostic; only the physical writer/reader changes. This module isolates
-that choice so `plans.pipeline.Pipeline` never mentions a format:
+The pipeline's checkpoint contract (write stage output, count its rows,
+write per-partition metrics, re-read for the next stage, manifest-gated
+resume) is format-agnostic; only the physical writer/reader changes. This
+module isolates that choice so `plans.pipeline.Pipeline` never mentions a
+format. Bookkeeping costs no Spark job beyond the data write: ``write``
+returns the rows each write task produced, taken from the written files'
+own metadata, and ``write_metrics`` receives plain rows.
 
 * ``ParquetStore`` — the sandbox/default backend: ``<warehouse>/<stage>/
-  data`` + ``.../_metrics`` parquet directories, manifest JSON on the
+  data`` parquet; per-task row counts from the part files' Parquet
+  footers (read on the driver with pyarrow); ``.../_metrics`` written on
+  the driver as one pyarrow parquet file; manifest JSON on the
   local/DBFS-style filesystem. This is the backend every test and the
   driver harness exercises.
 * ``IcebergStore`` — the production backend the north rule names: stage
   outputs become tables ``<catalog>.<namespace>.<stage>`` via the V2
-  ``writeTo(...).createOrReplace()`` API, metrics land in
-  ``<stage>__metrics``, and the resume manifest is a one-row
-  ``<stage>__manifest`` table (clusters don't share a local FS with the
-  driver). Requires the Iceberg runtime jar + a configured catalog
-  (``spark.sql.catalog.<name>`` …), which this sandbox does not ship —
-  the class is import-safe and unit-tested for its SQL/identifier
+  ``writeTo(...).createOrReplace()`` API; per-task row counts come from
+  the ``record_count`` column of the table's ``files`` metadata table;
+  metrics land in ``<stage>__metrics``, and the resume manifest is a
+  one-row ``<stage>__manifest`` table (clusters don't share a local FS
+  with the driver). Requires the Iceberg runtime jar + a configured
+  catalog (``spark.sql.catalog.<name>`` …), which this sandbox does not
+  ship — the class is import-safe and unit-tested for its identifier
   construction, and fails with an actionable error if used without a
   catalog.
 
@@ -29,18 +35,66 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
+from collections.abc import Iterable
 from typing import Protocol
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+#: ``_metrics`` columns, in order: one row per write task of a stage.
+_METRICS_SCHEMA = pa.schema(
+    [
+        ("stage", pa.string()),
+        ("partition_id", pa.int32()),
+        ("rows", pa.int64()),
+        ("stage_wall_sec", pa.float64()),
+        ("written_at", pa.timestamp("us", tz="UTC")),
+    ]
+)
 
 
 class StageStore(Protocol):
-    def write(self, name: str, df: DataFrame) -> DataFrame: ...
-    def write_metrics(self, name: str, df: DataFrame) -> None: ...
+    """What ``Pipeline`` needs from a table format.
+
+    ``write`` materializes ``df`` and returns the frame re-read from
+    storage plus ``{partition id of the write task: rows it wrote}``,
+    tasks that wrote no rows left out. The counts must come from the
+    written files' metadata, not from another Spark job over the data.
+    ``write_metrics`` stores ``_metrics`` rows shaped as ``_METRICS_SCHEMA``
+    (an empty list still leaves a readable, empty table).
+    ``commit_manifest`` must be atomic: a stage is done iff
+    ``manifest(name)`` returns its payload.
+    """
+
+    def write(self, name: str, df: DataFrame) -> tuple[DataFrame, dict[int, int]]: ...
+    def write_metrics(self, name: str, rows: list[tuple]) -> None: ...
     def read(self, name: str) -> DataFrame: ...
     def location(self, name: str) -> str: ...
     def manifest(self, name: str) -> dict | None: ...
     def commit_manifest(self, name: str, payload: dict) -> None: ...
+
+
+def _metrics_table(rows: list[tuple]) -> pa.Table:
+    return pa.Table.from_pylist(
+        [dict(zip(_METRICS_SCHEMA.names, r)) for r in rows], schema=_METRICS_SCHEMA
+    )
+
+
+def rows_by_task(files: Iterable[tuple[str, int]]) -> dict[int, int]:
+    """``{write-task partition id: rows}`` from (data file path, row count)
+    pairs, zero-row files dropped. Spark (``part-00003-…``) and Iceberg
+    (``00003-…``) both lead a data file's name with the partition id of
+    the task that wrote it; a task that rolled over to several files is
+    summed into one entry."""
+    out: dict[int, int] = {}
+    for path, n in files:
+        if n:
+            pid = int(re.search(r"\d+", os.path.basename(path)).group())
+            out[pid] = out.get(pid, 0) + n
+    return out
 
 
 class ParquetStore:
@@ -56,15 +110,24 @@ class ParquetStore:
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self.warehouse, name, "manifest.json")
 
-    def write(self, name: str, df: DataFrame) -> DataFrame:
+    def write(self, name: str, df: DataFrame) -> tuple[DataFrame, dict[int, int]]:
         path = self.location(name)
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        # pass the schema just written: inferring it from a footer is a job
+        out = self.spark.read.schema(df.schema).parquet(path)
+        files = [
+            (f, pq.read_metadata(os.path.join(path, f)).num_rows)
+            for f in os.listdir(path)
+            if f.startswith("part-")
+        ]
+        return out, rows_by_task(files)
 
-    def write_metrics(self, name: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.warehouse, name, "_metrics")
-        )
+    def write_metrics(self, name: str, rows: list[tuple]) -> None:
+        # driver-side: a handful of rows is not worth a Spark job
+        path = os.path.join(self.warehouse, name, "_metrics")
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        pq.write_table(_metrics_table(rows), os.path.join(path, "part-00000.parquet"))
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.location(name))
@@ -102,6 +165,10 @@ class IcebergStore:
     committed only after the data table, so a crash between the two
     leaves the stage "not done" and the resume re-runs it (same
     crash-semantics as ParquetStore's manifest.json-after-data order).
+    ``write`` takes the per-task row counts from ``record_count`` in the
+    table's ``files`` metadata table (a scan of Iceberg's manifests, not of
+    the data); ``write_metrics`` writes its rows through
+    ``createDataFrame(...).writeTo(...)``.
     """
 
     def __init__(self, spark: SparkSession, namespace: str):
@@ -123,12 +190,19 @@ class IcebergStore:
     def location(self, name: str) -> str:
         return f"{self.namespace}.{name}"
 
-    def write(self, name: str, df: DataFrame) -> DataFrame:
+    def write(self, name: str, df: DataFrame) -> tuple[DataFrame, dict[int, int]]:
         df.writeTo(self.location(name)).createOrReplace()
-        return self.read(name)
+        files = (
+            self.spark.read.table(f"{self.location(name)}.files")
+            .select("file_path", "record_count")
+            .collect()
+        )
+        return self.read(name), rows_by_task(files)
 
-    def write_metrics(self, name: str, df: DataFrame) -> None:
-        df.writeTo(self.location(f"{name}__metrics")).createOrReplace()
+    def write_metrics(self, name: str, rows: list[tuple]) -> None:
+        self.spark.createDataFrame(_metrics_table(rows)).writeTo(
+            self.location(f"{name}__metrics")
+        ).createOrReplace()
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.table(self.location(name))

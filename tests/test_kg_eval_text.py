@@ -464,3 +464,67 @@ def test_conv_stats_rollup(spark):
             got["c1"].n_assistant_turns) == (2, 1, 1)
     assert got["c1"].total_tokens == 5 and got["c1"].mean_turn_tokens == 2.5
     assert got["c2"].total_tokens == 1
+
+
+def _py_eval_counts(pred, gold):
+    """Pure-Python ie_eval('exact') counts: distinct keys, null-safe."""
+    def same(a, b):
+        return a is not None and b is not None and a.strip(" ").lower() == b.strip(" ").lower()
+
+    pairs = [
+        (p, g) for p in pred for g in gold
+        if p[0] is not None and p[0] == g[0] and p[3] is not None
+        and p[3] == g[3] and same(p[1], g[1]) and same(p[2], g[2])
+    ]
+    return {
+        "n_pred": len({p[:3] for p in pred}),
+        "n_gold": len({g[:4] for g in gold}),
+        "tp": len({p[:3] for p, _ in pairs}),
+        "tp_recall": len({g[:3] for _, g in pairs}),
+    }
+
+
+def _py_span_counts(pred, gold):
+    def spans(rows):
+        return {(r[0], a) for r in rows for a in (r[1], r[2])}
+
+    sp, sg = spans(pred), spans(gold)
+    return {
+        "n_pred_spans": len(sp),
+        "n_gold_spans": len(sg),
+        "tp": len({s for s in sp & sg if None not in s}),
+    }
+
+
+_PRED = [
+    ("c1", "a", "b", "R", 0.9),
+    ("c1", "a", "b", "R", 0.5),   # duplicate key
+    ("c1", " A", "b", "S", 0.4),  # matches gold only after trim + lower
+    ("c1", None, "b", "R", 0.3),
+    ("c2", "x", None, "R", 0.2),
+    ("c2", "x", None, "R", 0.1),  # duplicate key holding a null
+    (None, "a", "b", "R", 0.1),
+]
+_GOLD = [
+    ("c1", "a", "b", "R", 1.0),
+    ("c1", "a", "b", "R", 1.0),
+    ("c1", "a", "b", "S", 1.0),
+    ("c1", None, "b", "R", 1.0),
+    ("c2", "x", None, "R", 1.0),
+    ("c2", "x", "y", "R", 1.0),
+]
+
+
+@pytest.mark.parametrize(
+    "pred,gold", [(_PRED, _GOLD), ([], _GOLD), (_PRED, [])],
+    ids=["dups-and-nulls", "empty-pred", "empty-gold"],
+)
+def test_ie_eval_counts_match_python(spark, pred, gold):
+    p, g = _triples(spark, pred), _triples(spark, gold)
+    out = KE.ie_eval(p, g, "exact").collect()
+    assert len(out) == 1
+    want = _py_eval_counts(pred, gold)
+    assert {k: out[0][k] for k in want} == want
+    spans = KE.ie_span_eval(p, g).collect()
+    want = _py_span_counts(pred, gold)
+    assert {k: spans[0][k] for k in want} == want

@@ -17,7 +17,9 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from dygiepp_spark.plans.store import IcebergStore, ParquetStore, make_store
+from dygiepp_spark.plans.store import (
+    IcebergStore, ParquetStore, make_store, rows_by_task,
+)
 
 
 def test_cli_runs_and_resumes(spark, sf_dir, tmp_path, capsys):
@@ -115,6 +117,86 @@ def test_crash_mid_manifest_write_reruns_stage(spark, tmp_path, monkeypatch):
     rerun.run()
     assert [(r.name, r.rows, r.resumed) for r in rerun.results] == [("s1", 5, False)]
     assert json.loads((stage_dir / "manifest.json").read_text())["rows"] == 5
+
+
+METRICS_COLUMNS = ["stage", "partition_id", "rows", "stage_wall_sec", "written_at"]
+
+
+def _metrics(spark, wh, name):
+    return spark.read.parquet(os.path.join(wh, name, "_metrics"))
+
+
+def test_stage_bookkeeping_matches_written_data(spark, sf_dir, tmp_path):
+    """Row counts the store takes from the written files agree, stage by
+    stage, with the _metrics rows, the manifest and a re-read count; one
+    _metrics row per write task."""
+    from dygiepp_spark.plans.pipeline import build_kg_pipeline
+
+    wh = str(tmp_path / "wh")
+    p = build_kg_pipeline(spark, wh, sf_dir, with_coref=True, with_eval=True)
+    written = p.run()
+    assert [r.name for r in p.results] == [
+        "turns", "mentions", "triples", "coref_clusters",
+        "canonical_entities", "kg_edges", "kg_edges_agg", "eval_exact",
+    ]
+    for r in p.results:
+        m = _metrics(spark, wh, r.name)
+        assert m.columns == METRICS_COLUMNS
+        rows = m.collect()
+        assert {x.stage for x in rows} == {r.name}
+        assert len({x.partition_id for x in rows}) == len(rows)
+        assert all(x.rows > 0 for x in rows)
+        n = sum(x.rows for x in rows)
+        assert n == r.rows == p.store.manifest(r.name)["rows"], r.name
+        assert n == p.store.read(r.name).count(), r.name
+        assert written[r.name].schema == p.store.read(r.name).schema, r.name
+    assert p.results[-1].rows == 1
+
+
+def test_empty_stage_bookkeeping_and_resume(spark, tmp_path):
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    wh = str(tmp_path)
+
+    def build():
+        p = Pipeline(spark, wh)
+        p.stage("some")(lambda ctx: spark.range(10).toDF("id"))
+        p.stage("none")(lambda ctx: ctx["some"].filter(F.col("id") < 0))
+        p.stage("after")(lambda ctx: ctx["none"].select((F.col("id") + 1).alias("id")))
+        return p
+
+    p = build()
+    p.run()
+    assert [(r.name, r.rows) for r in p.results] == [("some", 10), ("none", 0), ("after", 0)]
+    full = _metrics(spark, wh, "some")
+    for name in ("none", "after"):
+        assert p.store.manifest(name)["rows"] == 0
+        m = _metrics(spark, wh, name)
+        assert m.schema == full.schema and m.count() == 0
+        assert p.store.read(name).columns == ["id"]
+    rerun = build()
+    rerun.run()
+    assert [(r.name, r.rows, r.resumed) for r in rerun.results] == [
+        ("some", 10, True), ("none", 0, True), ("after", 0, True)
+    ]
+
+
+def test_rows_by_task_sums_rolled_files(spark, tmp_path):
+    """A write task that rolls over to several files is one _metrics row,
+    for Spark's file names and for Iceberg's."""
+    store = ParquetStore(spark, str(tmp_path))
+    key = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(key, "2")
+    try:
+        _, rows = store.write("s", spark.range(10).repartition(2))
+    finally:
+        spark.conf.unset(key)
+    assert sorted(rows) == [0, 1] and sum(rows.values()) == 10
+    assert rows_by_task([
+        ("s3://b/t/data/00001-7-3f2a-00001.parquet", 3),
+        ("s3://b/t/data/00001-7-3f2a-00002.parquet", 2),
+        ("s3://b/t/data/00000-6-3f2a-00001.parquet", 0),
+    ]) == {1: 5}
 
 
 def test_cli_curated_pipeline_filters_then_extracts(spark, sf_dir, tmp_path, capsys):

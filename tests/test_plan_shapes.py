@@ -32,6 +32,21 @@ def count_shuffles(plan: str) -> int:
     return len(re.findall(r"^\(\d+\) Exchange\b", plan, flags=re.M))
 
 
+def built_without_jobs(spark, name, build):
+    """Return ``build()``, asserting that it started no Spark job."""
+    sc = spark.sparkContext
+    group = f"plan-shape-{name}"
+    sc.setJobGroup(group, "build a frame without running it")
+    try:
+        out = build()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out
+
+
 @pytest.fixture(scope="module")
 def stored_turns(spark, sf_dir, tmp_path_factory):
     """Turns materialized to parquet — the production shape (turns come
@@ -330,15 +345,29 @@ def test_coref_clusters_lazy_single_shuffle(spark, stored_turns):
     shuffles once, on conv_id."""
     from dygiepp_spark.operators.coref import coref_clusters
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = "plan-shape-coref-clusters"
-    sc.setJobGroup(group, "build coref_clusters without running it")
-    try:
-        clusters = coref_clusters(EX.detect_mentions(stored_turns))
-        assert list(tracker.getJobIdsForGroup(group)) == []
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+    clusters = built_without_jobs(
+        spark, "coref-clusters",
+        lambda: coref_clusters(EX.detect_mentions(stored_turns)),
+    )
     assert count_shuffles(plan_of(clusters)) <= 1
+
+
+def test_ie_eval_and_eval_stage_build_lazily(spark, sf_dir, stored_turns, tmp_path):
+    """ie_eval (and the DAG's eval_exact stage built on it) is one lazy
+    plan: building it runs no count/collect and no checkpoint."""
+    from dygiepp_spark.operators import kg_eval as KE
+    from dygiepp_spark.plans.pipeline import build_kg_pipeline
+
+    path = str(tmp_path / "triples")
+    EX.emit_triples(stored_turns).write.parquet(path)
+    triples = spark.read.parquet(path)
+    eval_stage = dict(build_kg_pipeline(spark, str(tmp_path), sf_dir).stages)[
+        "eval_exact"
+    ]
+    built_without_jobs(
+        spark, "ie-eval",
+        lambda: (
+            KE.ie_eval(triples, KE.gold_triples(stored_turns), "exact"),
+            eval_stage({"triples": triples, "turns": stored_turns}),
+        ),
+    )

@@ -1226,6 +1226,30 @@ def test_ivf_recall_bounds_and_query_coverage(spark, sf_dir):
     assert sum(r["n_hit"] for r in rows) > 0
 
 
+def test_ivf_recall_small_corpus_reaches_one(spark, sf_dir, tmp_path):
+    """A corpus smaller than k + 1 gives each query fewer than k true
+    neighbours; with one IVF cell the search finds all of them, so recall
+    is 1.0 on both engines (dividing by k would cap it at 3/5)."""
+    import duckdb
+
+    from dygiepp_spark.oracles_data import ivf_recall_oracle
+    from dygiepp_spark.operators.similarity import ivf_recall
+
+    path = str(tmp_path / "embeddings.parquet")
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") < 4
+    ).coalesce(1).write.parquet(path)
+    rows = ivf_recall(spark.read.parquet(path), n_centroids=1).collect()
+    assert sorted((r["query_id"], r["n_hit"], r["recall"]) for r in rows) == [
+        (q, 3, 1.0) for q in range(4)
+    ]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/*.parquet')")
+    assert sorted(con.sql(ivf_recall_oracle(n_centroids=1)).fetchall()) == [
+        (q, 3, 1.0) for q in range(4)
+    ]
+
+
 def test_filter_rate_by_source_conserves_verdicts(spark, sf_dir):
     from dygiepp_spark.functions.text import (
         composite_filter, filter_rate_by_source,
